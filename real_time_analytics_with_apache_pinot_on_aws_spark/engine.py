@@ -34,6 +34,13 @@ from . import fs as _fs
 from . import functions as pfn
 from .functions import aggsql
 from .schema import TableSchema, parse_schema
+from .sqlscan import (
+    _find_top_level_keyword,
+    _literal_spans,
+    _scan_balanced,
+    _search_unquoted_re,
+    _split_top_level,
+)
 from .streaming.ingest import IngestPipeline, RawRecordSource
 from .operators.clp import (
     clp_column_names as _clp_column_names,
@@ -1696,7 +1703,7 @@ class Engine:
             return self.query(orig), "sql"
         aggs: dict = {}
         sel_dims: list = []
-        for item in self._split_top_level_commas(m.group("items")):
+        for item in _split_top_level(m.group("items")):
             im = self._AGG_ITEM_RE.match(item.strip())
             if not im:
                 return self.query(orig), "sql"
@@ -1769,51 +1776,6 @@ class Engine:
             else:
                 return None
         return tuple(vals)
-
-    @staticmethod
-    def _skip_literal(s: str, i: int) -> int:
-        """``s[i]`` is an opening ``'`` or ``"``; return the index one past
-        the closing quote.  Honors backslash escapes (Spark's default
-        literal syntax) and doubled-quote escapes; an unterminated literal
-        consumes to end-of-string (the SQL parser will complain, not us)."""
-        q, j, n = s[i], i + 1, len(s)
-        while j < n:
-            ch = s[j]
-            if ch == "\\":
-                j += 2
-                continue
-            if ch == q:
-                if j + 1 < n and s[j + 1] == q:
-                    j += 2
-                    continue
-                return j + 1
-            j += 1
-        return n
-
-    @staticmethod
-    def _split_top_level_commas(items: str) -> list[str]:
-        # literal spans ('...' and "...", escapes included) are opaque
-        parts, depth, cur, i, n = [], 0, [], 0, len(items)
-        while i < n:
-            ch = items[i]
-            if ch in ("'", '"'):
-                j = Engine._skip_literal(items, i)
-                cur.append(items[i:j])
-                i = j
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-            i += 1
-        if cur:
-            parts.append("".join(cur))
-        return parts
 
     def query_agg(self, name: str, request) -> tuple[DataFrame, str]:
         """Star-tree-aware aggregation **[P1.2]**: route an AggRequest
@@ -2097,7 +2059,7 @@ class Engine:
         # matching left "FROM a, b"'s second engine table unresolved)
         edits = []
         for start, end, head, tname, alias_text, aname in (
-            self._iter_table_refs(sql, self._literal_spans(sql))
+            self._iter_table_refs(sql, _literal_spans(sql))
         ):
             if tname not in known:
                 continue
@@ -2178,17 +2140,26 @@ class Engine:
             id_col,
             "left_semi",
         )
+        return self._filter_residual_and_project(out, m, "VECTOR_SIMILARITY")
+
+    @staticmethod
+    def _filter_residual_and_project(
+        out: DataFrame, m: "re.Match", what: str
+    ) -> DataFrame:
+        """The shared tail of the index-predicate SQL forms: the index
+        picked the candidate rows ``out``; the residual conjuncts filter
+        them, then the SELECT list projects."""
         residual = m.group("residual")
         if residual:
-            if self._find_top_level_keyword(residual, "OR") != -1:
+            if _find_top_level_keyword(residual, "OR") != -1:
                 raise ValueError(
-                    "VECTOR_SIMILARITY with a top-level OR in the residual "
-                    "predicate is not supported: SQL precedence would let "
-                    "rows outside the vector top-k qualify — parenthesize "
-                    "the disjunction (AND (a OR b)) or restructure the query"
+                    f"{what} with a top-level OR in the residual predicate "
+                    "is not supported: SQL precedence would let rows outside "
+                    f"the {what} candidates qualify — parenthesize the "
+                    "disjunction (AND (a OR b)) or restructure the query"
                 )
             out = out.where(F.expr(residual))
-        items = [i.strip() for i in self._split_top_level_commas(m.group("items"))]
+        items = [i.strip() for i in _split_top_level(m.group("items"))]
         if items == ["*"]:
             return out
         return out.selectExpr(*items)
@@ -2222,20 +2193,7 @@ class Engine:
         out = self.text_match(
             table, col, m.group("q").replace("''", "'"), id_col
         )
-        residual = m.group("residual")
-        if residual:
-            if self._find_top_level_keyword(residual, "OR") != -1:
-                raise ValueError(
-                    "TEXT_MATCH with a top-level OR in the residual "
-                    "predicate is not supported: SQL precedence would let "
-                    "rows outside the text match qualify — parenthesize "
-                    "the disjunction (AND (a OR b)) or restructure the query"
-                )
-            out = out.where(F.expr(residual))
-        items = [i.strip() for i in self._split_top_level_commas(m.group("items"))]
-        if items == ["*"]:
-            return out
-        return out.selectExpr(*items)
+        return self._filter_residual_and_project(out, m, "TEXT_MATCH")
 
     _JSONMATCH_RE = re.compile(
         r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>\w+)\s+WHERE\s+"
@@ -2251,64 +2209,18 @@ class Engine:
         re.IGNORECASE | re.DOTALL,
     )
 
-    @staticmethod
-    def _split_top_level_and(expr: str) -> list[str]:
-        """Split a Pinot JSON_MATCH filter expression on top-level ANDs
-        (quote- and paren-aware)."""
-        parts, depth, start = [], 0, 0
-        i, n = 0, len(expr)
-        while i < n:
-            ch = expr[i]
-            if ch in ("'", '"'):
-                # both literal kinds are opaque: JSON paths are
-                # double-quoted and may contain ' and ' / '_and_'
-                # (round-6 review)
-                i = Engine._skip_literal(expr, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and expr[i : i + 3].upper() == "AND"
-                and (i == 0 or not expr[i - 1].isalnum())
-                and (i + 3 >= n or not expr[i + 3].isalnum())
-            ):
-                parts.append(expr[start:i])
-                i += 3
-                start = i
-                continue
-            i += 1
-        parts.append(expr[start:])
-        return [p.strip() for p in parts if p.strip()]
+    _GROUP_BY_RE = re.compile(r"GROUP\s+BY\b", re.IGNORECASE)
 
-    @staticmethod
-    def _has_top_level_group_by(sql: str) -> bool:
+    @classmethod
+    def _has_top_level_group_by(cls, sql: str) -> bool:
         """True when the STATEMENT itself is a group-by (GROUP BY at paren
         depth 0, outside literals) — a GROUP BY buried in a subquery must
         not make numGroupsLimit truncate the outer result (round-6
         review)."""
-        depth, i, n = 0, 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"'):
-                i = Engine._skip_literal(sql, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and sql[i : i + 5].upper() == "GROUP"
-                and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            ):
-                m = re.match(r"GROUP\s+BY\b", sql[i:], re.IGNORECASE)
-                if m:
-                    return True
-            i += 1
-        return False
+        i = _find_top_level_keyword(sql, "GROUP")
+        while i != -1 and not cls._GROUP_BY_RE.match(sql, i):
+            i = _find_top_level_keyword(sql, "GROUP", i + 5)
+        return i != -1
 
     @classmethod
     def _parse_json_match_expr(cls, expr: str) -> list[tuple]:
@@ -2326,8 +2238,8 @@ class Engine:
             return v
 
         preds: list[tuple] = []
-        for part in cls._split_top_level_and(expr):
-            if cls._find_top_level_keyword(part, "OR") != -1:
+        for part in filter(None, map(str.strip, _split_top_level(expr, "AND"))):
+            if _find_top_level_keyword(part, "OR") != -1:
                 raise ValueError(
                     "JSON_MATCH with OR is not supported — the postings "
                     "evaluation is a conjunction (split the query or use "
@@ -2352,7 +2264,7 @@ class Engine:
                     raise ValueError(f"IN needs a parenthesized list: {val!r}")
                 items = [
                     unq(x)
-                    for x in cls._split_top_level_commas(val[1:-1])
+                    for x in _split_top_level(val[1:-1])
                 ]
                 preds.append((m.group("path"), "IN", items))
             else:
@@ -2389,19 +2301,7 @@ class Engine:
         out = _ji.json_match_all(
             self._resolved_frame(table), id_col, col, preds
         )
-        residual = m.group("residual")
-        if residual:
-            if self._find_top_level_keyword(residual, "OR") != -1:
-                raise ValueError(
-                    "JSON_MATCH with a top-level OR in the residual "
-                    "predicate is not supported — parenthesize the "
-                    "disjunction (AND (a OR b)) or restructure the query"
-                )
-            out = out.where(F.expr(residual))
-        items = [i.strip() for i in self._split_top_level_commas(m.group("items"))]
-        if items == ["*"]:
-            return out
-        return out.selectExpr(*items)
+        return self._filter_residual_and_project(out, m, "JSON_MATCH")
 
     # Pinot query options **[P1.2]**: clients (the JDBC driver, the query
     # console) prefix statements with `SET key=value;` — e.g. SET
@@ -2446,52 +2346,23 @@ class Engine:
     _IDENT_RE = re.compile(r"'(\w+)'\s*$")
 
     def _rewrite_lookup_calls(self, sql: str) -> str:
-        """Replace every top-level LOOKUP(...) call with its subquery form.
+        """Replace every LOOKUP(...) call with its subquery form.
 
-        The scan is quote-aware for BOTH literal forms ('...' and "..." —
-        LOOKUP inside either is data, not a call) and word-boundary-checked
-        (MY_LOOKUP() is untouched).
+        LOOKUP inside a literal or comment is data, not a call, and the
+        match is word-boundary-checked (MY_LOOKUP() is untouched).
         """
-        out: list[str] = []
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"'):
-                j = self._skip_literal(sql, i)
-                out.append(sql[i:j])
-                i = j
-                continue
-            m = self._LOOKUP_RE.match(sql, i)
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                args, end = self._scan_balanced(sql, m.end() - 1)
-                out.append(self._lookup_subquery(args))
-                i = end
-                continue
-            out.append(ch)
-            i += 1
-        return "".join(out)
-
-    @staticmethod
-    def _scan_balanced(sql: str, open_idx: int) -> tuple[str, int]:
-        """From '(' at open_idx: (inner content, index past ')').  Literal
-        spans ('...' and "...", escapes included) are opaque."""
-        depth, j, n = 0, open_idx, len(sql)
-        while j < n:
-            ch = sql[j]
-            if ch in ("'", '"'):
-                j = Engine._skip_literal(sql, j)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return sql[open_idx + 1 : j], j + 1
-            j += 1
-        raise ValueError("unbalanced parentheses in function call")
+        m = _search_unquoted_re(self._LOOKUP_RE, sql)
+        if m is None:
+            return sql
+        args, end = _scan_balanced(sql, m.end() - 1)
+        return (
+            sql[: m.start()]
+            + self._lookup_subquery(args)
+            + self._rewrite_lookup_calls(sql[end:])
+        )
 
     def _lookup_subquery(self, args_str: str) -> str:
-        parts = [p.strip() for p in self._split_top_level_commas(args_str)]
+        parts = [p.strip() for p in _split_top_level(args_str)]
         if len(parts) < 4 or len(parts) % 2 != 0:
             raise ValueError(
                 "LOOKUP takes ('dimTable','valueColumn', 'pkColumn', factExpr"
@@ -2553,45 +2424,6 @@ class Engine:
         r"^(\d+):(SECONDS|MINUTES|HOURS|DAYS)$", re.IGNORECASE
     )
 
-    @staticmethod
-    def _find_top_level_keyword(s: str, word: str, start: int = 0) -> int:
-        """Index of the first depth-0, unquoted ('...' or "..."),
-        word-boundary match of ``word`` in ``s`` at or after ``start``;
-        -1 if absent."""
-        depth, i, n, w = 0, start, len(s), len(word)
-        while i < n:
-            ch = s[i]
-            if ch in ("'", '"'):
-                i = Engine._skip_literal(s, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and s[i : i + w].upper() == word.upper():
-                before_ok = i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-                after = s[i + w : i + w + 1]
-                after_ok = after == "" or not (after.isalnum() or after == "_")
-                if before_ok and after_ok:
-                    return i
-            i += 1
-        return -1
-
-    @staticmethod
-    def _search_unquoted(pattern: "re.Pattern", s: str) -> "re.Match | None":
-        """First match of ``pattern`` outside '...' / "..." literal spans."""
-        i, n = 0, len(s)
-        while i < n:
-            ch = s[i]
-            if ch in ("'", '"'):
-                i = Engine._skip_literal(s, i)
-                continue
-            m = pattern.match(s, i)
-            if m:
-                return m
-            i += 1
-        return None
-
     def _gapfill_time_bound(self, literal: str, out_fmt: str):
         """A GAPFILL start/end literal -> a timestamp Column.  Pinot writes
         them in the declared output format: epoch numbers for ``EPOCH``
@@ -2634,11 +2466,9 @@ class Engine:
             return F.timestamp_seconds(F.lit(v * size * scale))
         return F.to_timestamp(F.lit(literal))
 
-    def _try_query_gapfill(self, sql: str) -> DataFrame | None:
-        """Detect and serve the Pinot SQL gapfill forms; None = not gapfill."""
-        m = self._search_unquoted(self._GAPFILL_RE, sql)
-        if m is None:
-            return None
+    def _query_gapfill(self, sql: str, m: "re.Match") -> DataFrame:
+        """Serve the Pinot SQL gapfill forms; ``m`` is the first unquoted
+        ``SELECT GAPFILL(`` match in ``sql``."""
         import uuid
 
         from pyspark.sql import functions as F
@@ -2656,7 +2486,7 @@ class Engine:
         while k >= 0 and sql[k].isspace():
             k -= 1
         if k >= 0 and sql[k] == "(":
-            inner, after = self._scan_balanced(sql, k)
+            inner, after = _scan_balanced(sql, k)
             # splice back as a parenthesized SELECT so every enclosing
             # context stays valid SQL (FROM (...) t, WITH x AS (...), ...)
             outer = sql[:k] + f"(SELECT * FROM {view})" + sql[after:]
@@ -2665,25 +2495,25 @@ class Engine:
 
         # -- parse: SELECT GAPFILL(args) AS alias [, items] FROM src
         #           [WHERE cond] [ORDER BY ... / LIMIT ...]
-        gm = self._search_unquoted(self._GAPFILL_RE, inner)
-        args_str, pos = self._scan_balanced(inner, gm.end() - 1)
+        gm = _search_unquoted_re(self._GAPFILL_RE, inner)
+        args_str, pos = _scan_balanced(inner, gm.end() - 1)
         am = re.match(r"\s*AS\s+(\w+)\s*", inner[pos:], re.IGNORECASE)
         if not am:
             raise ValueError("GAPFILL(...) must be aliased: GAPFILL(...) AS <name>")
         alias = am.group(1)
         pos += am.end()
-        from_idx = self._find_top_level_keyword(inner, "FROM", pos)
+        from_idx = _find_top_level_keyword(inner, "FROM", pos)
         if from_idx < 0:
             raise ValueError("GAPFILL select: missing FROM clause")
         rest = inner[pos:from_idx].strip()
         items = (
-            [s.strip() for s in self._split_top_level_commas(rest.lstrip(","))]
+            [s.strip() for s in _split_top_level(rest.lstrip(","))]
             if rest.lstrip(",").strip()
             else []
         )
         src = inner[from_idx + 4 :].strip()
         if src.startswith("("):
-            sub, sub_end = self._scan_balanced(src, 0)
+            sub, sub_end = _scan_balanced(src, 0)
             src_df = self.spark.sql(sub)
             tail = src[sub_end:]
         else:
@@ -2696,10 +2526,10 @@ class Engine:
         # semantics); ORDER BY / LIMIT apply to the FILLED result.  Anything
         # else trailing the source is an error, never silently dropped.
         where, post = None, ""
-        w_idx = self._find_top_level_keyword(tail, "WHERE")
+        w_idx = _find_top_level_keyword(tail, "WHERE")
         post_idx = -1
         for kw in ("ORDER", "LIMIT"):
-            p = self._find_top_level_keyword(tail, kw)
+            p = _find_top_level_keyword(tail, kw)
             if p >= 0 and (post_idx < 0 or p < post_idx):
                 post_idx = p
         if w_idx >= 0:
@@ -2718,7 +2548,7 @@ class Engine:
             src_df = src_df.where(where)
 
         # -- GAPFILL arguments
-        args = [a.strip() for a in self._split_top_level_commas(args_str)]
+        args = [a.strip() for a in _split_top_level(args_str)]
         if len(args) < 5:
             raise ValueError(
                 "GAPFILL takes (timeExpr, 'outputFormat', 'start', 'end', "
@@ -2740,7 +2570,7 @@ class Engine:
             fm = re.match(r"FILL\s*\(", extra, re.IGNORECASE)
             tm2 = re.match(r"TIMESERIESON\s*\(", extra, re.IGNORECASE)
             if fm:
-                body, _ = self._scan_balanced(extra, fm.end() - 1)
+                body, _ = _scan_balanced(extra, fm.end() - 1)
                 col, _, mode = (p.strip() for p in body.partition(","))
                 mode = mode.strip().strip("'").upper()
                 if mode == "FILL_PREVIOUS_VALUE":
@@ -2752,7 +2582,7 @@ class Engine:
                 else:
                     raise ValueError(f"GAPFILL FILL mode {mode!r} unknown")
             elif tm2:
-                body, _ = self._scan_balanced(extra, tm2.end() - 1)
+                body, _ = _scan_balanced(extra, tm2.end() - 1)
                 group_cols = [
                     d.strip() for d in body.split(",") if d.strip()
                 ]
@@ -2851,6 +2681,72 @@ class Engine:
         re.IGNORECASE,
     )
 
+    # Statement routes, tried in order: each restructures one family of
+    # Pinot aggregates into a bounded plan (aggsql.py section comments)
+    # and bails (None) on shapes it cannot restructure.  They are
+    # mutually exclusive by construction: each treats the others' target
+    # names as route-bailing aggregates.
+    _STATEMENT_ROUTES = (
+        # DISTINCTCOUNT[HLL]MV: hll_sketch_agg / count(DISTINCT) over
+        # LATERAL VIEW POSEXPLODE elements, never a set of whole arrays
+        aggsql.rewrite_mv_distinct_statement,
+        # FUNNELCOUNT / tuple value aggregates: two-level per-(group, key)
+        aggsql.rewrite_keyed_agg_statement,
+        # FUNNELMAXSTEP / FUNNELMATCHSTEP: per-row window cascade
+        aggsql.rewrite_ordered_funnel_statement,
+        # SUMARRAYLONG / SUMARRAYDOUBLE: per-(group, position) aggregate
+        aggsql.rewrite_sumarray_statement,
+        # MODE(col, 'AVG'): three stacked hash aggregates
+        aggsql.rewrite_mode_avg_statement,
+    )
+
+    # Terminal handlers, in priority order, as (gate, handler) pairs: the
+    # first gate to return a truthy value answers the statement and its
+    # handler receives that value; plain Spark SQL answers the rest.
+    # Gates see the rewritten SQL and whether the LOOKUP pass changed it.
+    _TERMINAL_HANDLERS = (
+        # SELECT GAPFILL(...): operators/gapfill
+        (
+            lambda self, sql, looked_up: _search_unquoted_re(self._GAPFILL_RE, sql),
+            lambda self, sql, m: self._query_gapfill(sql, m),
+        ),
+        # LOOKUP subqueries: plan with PushProjectionThroughUnion excluded
+        (
+            lambda self, sql, looked_up: looked_up,
+            lambda self, sql, _: self._sql_without_union_pushdown(sql),
+        ),
+        # $docId / $segmentName / $hostName
+        (
+            lambda self, sql, looked_up: _search_unquoted_re(
+                self._VIRTUAL_COL_RE, sql
+            ),
+            lambda self, sql, _: self._query_virtual_columns(sql),
+        ),
+        (
+            lambda self, sql, looked_up: self._VECSIM_RE.match(sql),
+            lambda self, sql, m: self._query_vector_similarity(m),
+        ),
+        (
+            lambda self, sql, looked_up: self._match_on_table(self._TEXTMATCH_RE, sql),
+            lambda self, sql, m: self._query_text_match(m),
+        ),
+        (
+            lambda self, sql, looked_up: self._match_on_table(self._JSONMATCH_RE, sql),
+            lambda self, sql, m: self._query_json_match(m),
+        ),
+    )
+
+    def _match_on_table(self, pattern: "re.Pattern", sql: str) -> "re.Match | None":
+        """``pattern.match(sql)`` when its ``table`` group names a table
+        this engine serves, else None."""
+        m = pattern.match(sql)
+        if m and (
+            m.group("table") in self.configs
+            or m.group("table") in self.offline_configs
+        ):
+            return m
+        return None
+
     def query(self, sql: str) -> DataFrame:
         """/query/sql analog — full Spark SQL + the Pinot function surface.
 
@@ -2871,7 +2767,7 @@ class Engine:
         left-outer join, Pinot's replicated dim-join in Spark terms.
         ``SELECT GAPFILL(...) ...`` **[P1.2]** (Pinot's SQL gapfill, all
         three documented shapes) routes through
-        :meth:`_try_query_gapfill` -> operators/gapfill.
+        :meth:`_query_gapfill` -> operators/gapfill.
         ``CLPDECODE(field)`` over a column a config declares CLP-encoded
         **[P1.2]** expands to the 3-argument form over its physical
         columns (:meth:`_expand_clpdecode_sugar`; operators/clp.py).
@@ -2908,22 +2804,6 @@ class Engine:
             # sentinel view of the same storage)
             sql = self._apply_null_disabled_rewrite(sql)
         sql = self._expand_clpdecode_sugar(sql)
-        # Pinot aggregate spellings (DISTINCTCOUNTHLL, FIRSTWITHTIME,
-        # PERCENTILE(x, 90), the *MV family ...) -> Spark aggregate
-        # expressions **[P1.2]** — SQL macros cannot be aggregates, so the
-        # wire surface rewrites call sites textually (quote-aware,
-        # functions/aggsql.py)
-        from .functions.aggsql import (
-            canonicalize_pinot_spellings,
-            inline_route_ctes,
-            rewrite_keyed_agg_statement,
-            rewrite_mode_avg_statement,
-            rewrite_mv_distinct_statement,
-            rewrite_ordered_funnel_statement,
-            rewrite_pinot_aggregates,
-            rewrite_sumarray_statement,
-        )
-
         # Underscored Pinot spellings canonicalize BEFORE the statement
         # routes so every gate/classification sees one spelling —
         # DISTINCT_COUNT_HLL_MV routes to the same bounded plan as
@@ -2931,7 +2811,7 @@ class Engine:
         # call-site lookup split routed and fallback answers by spelling
         # choice).  The live-catalog guard keeps runtime-registered UDFs
         # resolving natively.
-        sql = canonicalize_pinot_spellings(
+        sql = aggsql.canonicalize_pinot_spellings(
             sql, keep_native=self._catalog_has_function
         )
 
@@ -2943,68 +2823,32 @@ class Engine:
         # inlined text feeds the ROUTES ONLY: if every route bails or
         # the probe fails, the original statement (CTE intact) stands,
         # so uninlinable CTE statements keep today's fold paths.
-        route_src = inline_route_ctes(sql)
+        route_src = aggsql.inline_route_ctes(sql)
         if route_src is None:
             route_src = sql
 
-        # DISTINCTCOUNTHLLMV/DISTINCTCOUNTMV statements route to the
-        # bounded exploded plan FIRST (hll_sketch_agg / count(DISTINCT)
-        # over LATERAL VIEW POSEXPLODE elements — per-group state is the
-        # sketch/distinct-element set, never a set of whole arrays); the
-        # route bails (None) on shapes it cannot restructure and those
-        # fall through to the normalized-set call-site fallback.  Same
-        # analyze-cleanly-or-original-stands contract as the table-ref
-        # rewrites.
-        routed_mv = rewrite_mv_distinct_statement(
-            route_src, is_aggregate=self._is_catalog_aggregate
-        )
-        if routed_mv is None:
-            # FUNNELCOUNT / tuple value-aggregate statements route to the
-            # bounded two-level per-(group, key) aggregate plan (round 8
-            # — zero collected arrays; aggsql.py section comment).  The
-            # two routes are mutually exclusive by construction: each
-            # treats the other's target names as route-bailing aggregates.
-            routed_mv = rewrite_keyed_agg_statement(
-                route_src, is_aggregate=self._is_catalog_aggregate
-            )
-        if routed_mv is None:
-            # FUNNELMAXSTEP / FUNNELMATCHSTEP statements route to the
-            # window-cascade plan (round 8 — per-row state instead of the
-            # fold's per-group collected event array; aggsql.py section
-            # comment).  Mutually exclusive with the two routes above by
-            # the same co-aggregate bail rules.
-            routed_mv = rewrite_ordered_funnel_statement(
-                route_src, is_aggregate=self._is_catalog_aggregate
-            )
-        if routed_mv is None:
-            # SUMARRAYLONG/SUMARRAYDOUBLE statements route to the bounded
-            # positional two-level plan (round-8 session — per-(group,
-            # position) hash aggregate, outer collect bounded by the max
-            # array length; aggsql.py section comment).  Unroutable
-            # shapes keep the loud call-site reject.
-            routed_mv = rewrite_sumarray_statement(
-                route_src, is_aggregate=self._is_catalog_aggregate
-            )
-        if routed_mv is None:
-            # MODE(col, 'AVG') statements route to the three-level
-            # tied-mode-average plan (round-8 session — stacked hash
-            # aggregates, no windows or collections; aggsql.py section
-            # comment).  Unroutable shapes keep the loud reject.
-            routed_mv = rewrite_mode_avg_statement(
-                route_src, is_aggregate=self._is_catalog_aggregate
-            )
-        if routed_mv is not None:
+        # Pinot aggregate spellings (DISTINCTCOUNTHLL, FIRSTWITHTIME,
+        # PERCENTILE(x, 90), the *MV family ...) -> Spark aggregate
+        # expressions **[P1.2]** — SQL macros cannot be aggregates, so the
+        # wire surface rewrites call sites textually (functions/aggsql.py).
+        # The first statement route to return SQL wins; it must ANALYZE
+        # cleanly or the call-site rewrite of the original stands — the
+        # same contract as the table-ref rewrites.
+        for route in self._STATEMENT_ROUTES:
+            routed = route(route_src, is_aggregate=self._is_catalog_aggregate)
+            if routed is None:
+                continue
             # loud arity/shape ValueErrors from the rewrite must surface,
             # so only the ANALYSIS is inside the try
-            probed = rewrite_pinot_aggregates(
-                routed_mv, keep_native=self._catalog_has_function
+            probed = aggsql.rewrite_pinot_aggregates(
+                routed, keep_native=self._catalog_has_function
             )
             try:
                 self.spark.sql(probed)  # analysis only, no execution
                 sql = probed  # reuse the probed text: one rewrite, not two
             except Exception as probe_exc:
                 try:
-                    sql = rewrite_pinot_aggregates(
+                    sql = aggsql.rewrite_pinot_aggregates(
                         sql, keep_native=self._catalog_has_function
                     )
                 except ValueError as fallback_err:
@@ -3017,37 +2861,20 @@ class Engine:
                     # analysis failures with no hint that a statement
                     # route engaged or what the manual recipe is)
                     raise probe_exc from fallback_err
+            break
         else:
-            sql = rewrite_pinot_aggregates(
+            sql = aggsql.rewrite_pinot_aggregates(
                 sql, keep_native=self._catalog_has_function
             )
-        has_lookup = False
+        looked_up = False
         if self._LOOKUP_RE.search(sql):
             rewritten = self._rewrite_lookup_calls(sql)
-            has_lookup = rewritten != sql
+            looked_up = rewritten != sql
             sql = rewritten
-        gf = self._try_query_gapfill(sql)
-        if gf is not None:
-            return gf
-        if has_lookup:
-            return self._sql_without_union_pushdown(sql)
-        if self._search_unquoted(self._VIRTUAL_COL_RE, sql):
-            return self._query_virtual_columns(sql)
-        vm = self._VECSIM_RE.match(sql)
-        if vm:
-            return self._query_vector_similarity(vm)
-        tm = self._TEXTMATCH_RE.match(sql)
-        if tm and (
-            tm.group("table") in self.configs
-            or tm.group("table") in self.offline_configs
-        ):
-            return self._query_text_match(tm)
-        jm = self._JSONMATCH_RE.match(sql)
-        if jm and (
-            jm.group("table") in self.configs
-            or jm.group("table") in self.offline_configs
-        ):
-            return self._query_json_match(jm)
+        for gate, handler in self._TERMINAL_HANDLERS:
+            hit = gate(self, sql, looked_up)
+            if hit:
+                return handler(self, sql, hit)
         return self.spark.sql(self._apply_ts_index_rewrite(sql))
 
     _CLPDECODE_SUGAR_RE = re.compile(
@@ -3073,7 +2900,7 @@ class Engine:
                 declared[c.lower()] = c
         if not declared:
             return sql
-        spans = self._literal_spans(sql)
+        spans = _literal_spans(sql)
 
         def repl(m: "re.Match") -> str:
             if any(s <= m.start() < e for s, e in spans):
@@ -3234,7 +3061,7 @@ class Engine:
         targets = {k: v for k, v in targets.items() if k in low}
         if not targets:
             return sql
-        spans = self._literal_spans(sql)
+        spans = _literal_spans(sql)
         for m in re.finditer(
             r"\b(INSERT|CREATE|REPLACE|DELETE|UPDATE|MERGE|DROP|ALTER)\b",
             sql,
@@ -3444,22 +3271,6 @@ class Engine:
             out.pop(key, None)
         return out
 
-    @staticmethod
-    def _literal_spans(sql: str) -> list[tuple[int, int]]:
-        """[start, end) spans of every quoted literal, via _skip_literal —
-        the same scanner the LOOKUP rewriter trusts (both quote forms,
-        backslash and doubled-quote escapes)."""
-        spans: list[tuple[int, int]] = []
-        i, n = 0, len(sql)
-        while i < n:
-            if sql[i] in ("'", '"'):
-                j = Engine._skip_literal(sql, i)
-                spans.append((i, j))
-                i = j
-            else:
-                i += 1
-        return spans
-
     def _apply_ts_index_rewrite(self, sql: str) -> str:
         """Pinot TIMESTAMP index query rewrite **[P1.2]**: replace
         ``dateTrunc('GRAN', col)`` / ``date_trunc('GRAN', col)`` over a
@@ -3479,7 +3290,7 @@ class Engine:
         mapping = self._timestamp_index_rewrites()
         if not mapping:
             return sql
-        spans = self._literal_spans(sql)
+        spans = _literal_spans(sql)
         # a WITH-prefixed COMMAND (CTE + INSERT/CREATE/...) would pass the
         # prefix gate and the probe would EXECUTE it; reject when a command
         # keyword appears outside every string literal

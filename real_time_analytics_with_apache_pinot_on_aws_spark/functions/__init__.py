@@ -1,6 +1,6 @@
 """Pinot 1.2 function surface, Spark-first (SURVEY §2.B B49-B56).
 
-Two layers:
+Three modules:
 
 - ``sqlfns.register_all(spark)`` — Pinot-named scalar functions registered as
   Spark SQL UDFs (``CREATE TEMPORARY FUNCTION ... RETURN <builtin expr>``).
@@ -10,15 +10,18 @@ Two layers:
 - ``helpers`` — Python Column builders for functions whose *arguments* are
   plan-time literals that need parsing (DATETIMECONVERT format specs,
   JSONEXTRACTSCALAR result types).  These also compile to pure builtins.
-- ``aggs`` — Pinot aggregation-function names as Column aggregate builders
-  (MINMAXRANGE, DISTINCTCOUNTHLL, FIRSTWITHTIME, PERCENTILETDIGEST, ...).
+- ``aggsql`` — the Pinot aggregate spellings (DISTINCTCOUNTHLL,
+  FIRSTWITHTIME, PERCENTILETDIGEST, ...) as call-site rewrites to Spark
+  aggregate expressions.  The wire path applies them to SQL text; the
+  Python API builds the same aggregate with
+  ``F.expr(rewrite_pinot_aggregates("DISTINCTCOUNTHLL(col)"))``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from . import aggs, helpers, sqlfns  # noqa: F401
+from . import helpers, sqlfns  # noqa: F401
 
 
 def register_all(spark: SparkSession) -> None:

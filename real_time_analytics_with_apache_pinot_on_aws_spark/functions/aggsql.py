@@ -52,6 +52,16 @@ from __future__ import annotations
 import contextvars
 import re
 
+from ..sqlscan import (
+    _code_indices,
+    _scan_balanced,
+    _search_unquoted_re,
+    _skip_comment,
+    _skip_literal,
+    _skip_opaque,
+    _split_top_level,
+)
+
 # the keep-native predicate active for the CURRENT rewrite pass — set by
 # rewrite_pinot_aggregates so builders that rewrite NESTED SQL text
 # (IN_SUBQUERY's quoted subquery) inherit the caller's live-catalog
@@ -256,7 +266,7 @@ def _in_subquery(name: str):
             raise ValueError(
                 f"{name}: unbalanced ID_SET( in subquery"
             ) from None
-        id_args = _split_top_level_commas(id_args_text)
+        id_args = _split_top_level(id_args_text)
         if not id_args[0].strip():
             raise ValueError(
                 f"{name}: ID_SET needs a column argument, got ID_SET()"
@@ -728,7 +738,7 @@ def _parse_funnelcount_clauses(args: list[str]) -> tuple:
         raise ValueError(
             "FUNNELCOUNT requires both STEPS(...) and CORRELATE_BY(...)"
         )
-    steps = [s.strip() for s in _split_top_level_commas(clauses["STEPS"])]
+    steps = [s.strip() for s in _split_top_level(clauses["STEPS"])]
     if not steps or not all(steps):
         raise ValueError("FUNNELCOUNT: STEPS(...) needs >= 1 predicate")
     corr = clauses["CORRELATE_BY"].strip()
@@ -1478,82 +1488,6 @@ _REWRITES.update(
 )
 
 
-def _skip_literal(sql: str, i: int) -> int:
-    """Index past the string literal starting at sql[i] (quote char);
-    handles doubled-quote AND backslash escapes (Spark's default literal
-    syntax — Engine._skip_literal agrees; round-6 review: ignoring \\'
-    let the rewrite corrupt literal content)."""
-    q = sql[i]
-    j = i + 1
-    n = len(sql)
-    while j < n:
-        if sql[j] == "\\" and j + 1 < n:
-            j += 2
-            continue
-        if sql[j] == q:
-            if j + 1 < n and sql[j + 1] == q:  # '' escape
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def _skip_comment(sql: str, i: int):
-    """Index past the SQL comment starting at ``sql[i]`` (``--`` to end
-    of line; ``/* */`` span, unterminated runs to EOF like Spark's
-    lexer), or ``None`` when no comment starts there.  Round-10 (r9
-    ADVICE): the CTE reference scanner treats comment content as opaque
-    — a ``FROM name`` inside a comment is neither a reference site nor
-    a count bump, so commented statements keep their bounded routes."""
-    if sql.startswith("--", i):
-        j = sql.find("\n", i + 2)
-        return len(sql) if j < 0 else j + 1
-    if sql.startswith("/*", i):
-        j = sql.find("*/", i + 2)
-        return len(sql) if j < 0 else j + 2
-    return None
-
-
-def _scan_balanced(sql: str, open_idx: int) -> tuple[str, int]:
-    """From '(' at open_idx: (inner content, index past ')'). Literals
-    are opaque."""
-    depth, j, n = 0, open_idx, len(sql)
-    while j < n:
-        ch = sql[j]
-        if ch in ("'", '"'):
-            j = _skip_literal(sql, j)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return sql[open_idx + 1 : j], j + 1
-        j += 1
-    raise ValueError("unbalanced parentheses in aggregate call")
-
-
-def _split_top_level_commas(s: str) -> list[str]:
-    parts, depth, start = [], 0, 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(s, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-        i += 1
-    parts.append(s[start:])
-    return [p for p in parts]
-
-
 # Spark builtins whose underscore-stripped form collides with a table
 # entry — they keep their native resolution (audited against the Spark
 # 4.1 catalog: the stats family plus BOOL_AND/BOOL_OR, whose stripped
@@ -1603,8 +1537,8 @@ def canonicalize_pinot_spellings(sql: str, keep_native=None) -> str:
     i, n = 0, len(sql)
     while i < n:
         ch = sql[i]
-        if ch in ("'", '"'):
-            j = _skip_literal(sql, i)
+        j = _skip_opaque(sql, i)
+        if j is not None:
             out.append(sql[i:j])
             i = j
             continue
@@ -1664,8 +1598,8 @@ def _rewrite_pinot_aggregates_inner(sql: str, keep_native) -> str:
     i, n = 0, len(sql)
     while i < n:
         ch = sql[i]
-        if ch in ("'", '"'):
-            j = _skip_literal(sql, i)
+        j = _skip_opaque(sql, i)
+        if j is not None:
             out.append(sql[i:j])
             i = j
             continue
@@ -1690,7 +1624,7 @@ def _rewrite_pinot_aggregates_inner(sql: str, keep_native) -> str:
                     if not inner.strip()
                     else [
                         rewrite_pinot_aggregates(a, keep_native).strip()
-                        for a in _split_top_level_commas(inner)
+                        for a in _split_top_level(inner)
                     ]
                 )
                 try:
@@ -1981,14 +1915,15 @@ _RESERVED_NON_CALLS = frozenset(
 
 def _scan_call_sites(sql: str) -> list:
     """(name, start, open_paren_idx, inner, end_past_close) for every
-    ``ident(`` site at EVERY nesting depth; literal content is opaque.
-    Reserved non-call words (``_RESERVED_NON_CALLS``) are skipped."""
+    ``ident(`` site at EVERY nesting depth; literal and comment content
+    is opaque.  Reserved non-call words (``_RESERVED_NON_CALLS``) are
+    skipped."""
     sites = []
     i, n = 0, len(sql)
     while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(sql, i)
+        j = _skip_opaque(sql, i)
+        if j is not None:
+            i = j
             continue
         m = _IDENT_CALL_RE.match(sql, i)
         if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
@@ -2010,48 +1945,22 @@ def _scan_call_sites(sql: str) -> list:
 
 def _top_level_keywords(sql: str) -> list:
     """(KEYWORD_UPPER, start, end) for clause keywords at paren depth 0
-    outside literals."""
-    hits = []
-    depth, i, n = 0, 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(sql, i)
+    outside literals and comments."""
+    hits, resume = [], 0
+    for i, depth in _code_indices(sql):
+        if depth or i < resume:
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _MV_STMT_TOPKW_RE.match(sql, i)
-            # a '.' predecessor means a QUALIFIED IDENTIFIER part
-            # (`d.limit`, a keyword-named column), never a clause
-            # keyword — without this, the relation boundary truncated
-            # at the fake keyword and the routes spliced garbled SQL
-            # (post-review, confirmed against live Spark: `limit` is
-            # non-reserved and valid as a column name)
-            if m and (
-                i == 0
-                or not (sql[i - 1].isalnum() or sql[i - 1] in "_.")
-            ):
-                hits.append((m.group(0).upper(), i, m.end()))
-                i = m.end()
-                continue
-        i += 1
+        m = _MV_STMT_TOPKW_RE.match(sql, i)
+        # a '.' predecessor means a QUALIFIED IDENTIFIER part
+        # (`d.limit`, a keyword-named column), never a clause
+        # keyword — without this, the relation boundary truncated
+        # at the fake keyword and the routes spliced garbled SQL
+        # (post-review, confirmed against live Spark: `limit` is
+        # non-reserved and valid as a column name)
+        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_.")):
+            hits.append((m.group(0).upper(), i, m.end()))
+            resume = m.end()
     return hits
-
-
-def _search_unquoted_re(pattern: "re.Pattern", sql: str) -> bool:
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] in ("'", '"'):
-            i = _skip_literal(sql, i)
-            continue
-        m = pattern.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            return True
-        i += 1
-    return False
 
 
 def _subquery_spans(sql: str) -> list:
@@ -2065,11 +1974,11 @@ def _subquery_spans(sql: str) -> list:
     spans = []
     i, n = 0, len(sql)
     while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(sql, i)
+        j = _skip_opaque(sql, i)
+        if j is not None:
+            i = j
             continue
-        if ch == "(":
+        if sql[i] == "(":
             j = i + 1
             while j < n and sql[j] in " \t\r\n":
                 j += 1
@@ -2088,8 +1997,9 @@ def _all_selects_inside(sql: str, start: int, spans: list) -> bool:
     pat = re.compile(r"SELECT\b", re.IGNORECASE)
     i, n = start, len(sql)
     while i < n:
-        if sql[i] in ("'", '"'):
-            i = _skip_literal(sql, i)
+        j = _skip_opaque(sql, i)
+        if j is not None:
+            i = j
             continue
         m = pat.match(sql, i)
         if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
@@ -2172,12 +2082,9 @@ def _cte_table_refs(text: str, name: str):
     i, n = 0, len(text)
     while i < n:
         ch = text[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(text, i)
-            continue
-        c = _skip_comment(text, i)
-        if c is not None:
-            i = c
+        j = _skip_opaque(text, i)
+        if j is not None:
+            i = j
             continue
         if ch == "(":
             j = i + 1
@@ -2473,7 +2380,7 @@ def _parse_routable_statement(
             re.IGNORECASE,
         ) if op_end is not None else None
         if fm is None or len(
-            _split_top_level_commas(shape.from_text)
+            _split_top_level(shape.from_text)
         ) != 1:
             return None
         # cond-less CROSS/NATURAL flavors (round 11): the capture holds
@@ -2513,7 +2420,7 @@ def _parse_routable_statement(
                 re.IGNORECASE | re.DOTALL,
             ) if op_end is not None else None
             if sm is None or len(
-                _split_top_level_commas(join_text)
+                _split_top_level(join_text)
             ) != 1:
                 return None
             condless = (not final) and bool(sm.group("condless"))
@@ -2524,7 +2431,7 @@ def _parse_routable_statement(
                 # insertion point)
                 shape.insert_at = join_end + len(join_text.rstrip())
                 shape.rel_next = join_next  # ONE relation-end derivation
-    elif len(_split_top_level_commas(shape.from_text)) > 1:
+    elif len(_split_top_level(shape.from_text)) > 1:
         # a TOP-LEVEL COMMA LIST — the pre-ANSI implicit cross join
         # `FROM a, b WHERE a.k = b.k` (round 11, VERDICT r10 item 6,
         # upgraded from the documented boundary to an admission): every
@@ -2542,7 +2449,7 @@ def _parse_routable_statement(
         # chain branch above (`a, b JOIN c` nests the join under the
         # cross product — a precedence subtlety not worth modeling).
         pos = shape.from_end
-        for piece in _split_top_level_commas(shape.from_text):
+        for piece in _split_top_level(shape.from_text):
             bound = pos + len(piece)
             op_end = _chain_operand_end(
                 sql, pos, bound, allow_subqueries
@@ -2687,7 +2594,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     mv_parsed = []
     for name, st, op, inner, end in mv_sites:
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in _split_top_level(inner)]
             if inner.strip()
             else []
         )
@@ -2744,7 +2651,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
         edits.append((st, end, repl))
     for name, st, op, inner, end in wrap_sites:
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in _split_top_level(inner)]
             if inner.strip()
             else []
         )
@@ -2904,7 +2811,7 @@ def _theta_set_ast(e: str, nflags: int):
             f"SET_INTERSECT / SET_DIFF(...), got: {e!r}"
         )
     op = m.group(1).upper()
-    parts = _split_top_level_commas(m.group(2))
+    parts = _split_top_level(m.group(2))
     parts = [p for p in parts if p.strip()]
     if op == "SET_DIFF" and len(parts) != 2:
         raise ValueError("SET_DIFF takes exactly 2 set arguments")
@@ -2990,7 +2897,7 @@ def _parse_route_clauses(sql: str, shape, guard: str = "__rg"):
         if gm is None:
             return None
         base = group_sp[1] + gm.end()
-        parts = _split_top_level_commas(gtext[gm.end():])
+        parts = _split_top_level(gtext[gm.end():])
         sel_items = None  # lazily split for ordinal resolution
         off = 0
         k = 0
@@ -3014,7 +2921,7 @@ def _parse_route_clauses(sql: str, shape, guard: str = "__rg"):
                 # ending in an identifier, so their whole text stays and
                 # the probe folds any mis-read.
                 if sel_items is None:
-                    sel_items = _split_top_level_commas(
+                    sel_items = _split_top_level(
                         sql[kws[0][2] : from_sp[0]]
                     )
                 idx = int(t)
@@ -3118,7 +3025,7 @@ def _bind_group_expr_edits(
     # would serve an answer where an ambiguous original errors loudly.
     sel_spans = []
     pos = shape.kws[0][2]
-    for item in _split_top_level_commas(sql[pos : from_sp[0]]):
+    for item in _split_top_level(sql[pos : from_sp[0]]):
         sel_spans.append(
             (
                 pos + (len(item) - len(item.lstrip())),
@@ -3258,7 +3165,7 @@ def _collect_decomposable_co_sites(
             pred, end = parsed_f  # end swallows the clause when present
             if re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE):
                 return None
-            nargs = len(_split_top_level_commas(inner))
+            nargs = len(_split_top_level(inner))
             if u == "COUNT":
                 if nargs != 1 and inner.strip() != "*" and (
                     not count_multiarg_ok or pred is not None
@@ -3442,7 +3349,7 @@ def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
     for name, st, op, inner, end, fpred in target_sites:
         u = name.upper()
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in _split_top_level(inner)]
             if inner.strip()
             else []
         )
@@ -3728,7 +3635,7 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
     for name, st, end, inner, pred in targets:
         kind = name.upper()[6:]  # MAXSTEP / MATCHSTEP / STEPDURATIONSTATS
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in _split_top_level(inner)]
             if inner.strip()
             else []
         )
@@ -3981,7 +3888,7 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
     parsed = []  # (NAME, start, end)
     for name, st, op, inner, end, fpred in target_sites:
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in _split_top_level(inner)]
             if inner.strip()
             else []
         )
@@ -4103,7 +4010,7 @@ def rewrite_mode_avg_statement(sql: str, is_aggregate=None):
         if name.upper() != "MODE":
             continue
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in _split_top_level(inner)]
             if inner.strip()
             else []
         )

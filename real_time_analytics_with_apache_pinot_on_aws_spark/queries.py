@@ -28,7 +28,7 @@ from pyspark.sql import Window as W
 
 from . import catalog
 from . import functions as pfn
-from .functions import aggs as A
+from .functions.aggsql import rewrite_pinot_aggregates
 from .functions import helpers as H
 
 Builder = Callable[[SparkSession, str], DataFrame]
@@ -314,15 +314,20 @@ sql_query(
     """,
     doc="B20: DISTINCTCOUNTHLL — self-validating oracle: the query computes "
         "BOTH the HLL estimate and the exact distinct count and emits "
-        "|est-exact|/exact <= 0.15 (3x the rsd=0.05 target, deterministic "
-        "given fixed hashing); the oracle contributes the exact side + TRUE",
+        "|est-exact|/exact <= 0.15 (the wire's DataSketches HLL, rsd ~1.6% "
+        "at lgConfigK 12, deterministic given fixed hashing); the oracle "
+        "contributes the exact side + TRUE",
 )
 def b20_distinctcounthll(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     ev = spark.table("events")
     agg = ev.groupBy("event_type").agg(
-        A.distinctcounthll(F.col("user_id")).alias("hll_users"),
-        A.distinctcount(F.col("user_id")).alias("exact_users"),
+        F.expr(rewrite_pinot_aggregates("DISTINCTCOUNTHLL(user_id)")).alias(
+            "hll_users"
+        ),
+        F.expr(rewrite_pinot_aggregates("DISTINCTCOUNT(user_id)")).alias(
+            "exact_users"
+        ),
     )
     return agg.select(
         "event_type",
@@ -372,8 +377,12 @@ def b22_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     li = spark.table("lineitem").select("l_returnflag", "l_extendedprice")
     est = li.groupBy("l_returnflag").agg(
-        A.percentile_approx(F.col("l_extendedprice"), 50).alias("p50_est"),
-        A.percentile_approx(F.col("l_extendedprice"), 99).alias("p99_est"),
+        F.expr(
+            rewrite_pinot_aggregates("PERCENTILEEST(l_extendedprice, 50)")
+        ).alias("p50_est"),
+        F.expr(
+            rewrite_pinot_aggregates("PERCENTILEEST(l_extendedprice, 99)")
+        ).alias("p99_est"),
     )
     # Rank check: estimates broadcast back over the scan (group-count rows),
     # margin = 10x the sketch's n/accuracy bound + 1 for rank-rounding.

@@ -100,6 +100,26 @@ def test_pinot_agg_values_match_spark_equivalents(spark, agg_engine, pinot, spar
     assert got == want, (pinot, got, want)
 
 
+@pytest.mark.parametrize(
+    "comment", ["-- user's count\n", "/* it's */"], ids=["line", "block"]
+)
+def test_comment_with_apostrophe_is_opaque(agg_engine, comment):
+    """An apostrophe inside a SQL comment opens no literal: the Pinot
+    call after the comment is still rewritten, and the statement answers
+    exactly like its comment-free twin instead of reaching Spark as an
+    unresolved DISTINCTCOUNTHLL."""
+    commented = f"SELECT {comment} DISTINCTCOUNTHLL(u) AS n FROM aggsrc"
+    assert R(commented) == (
+        f"SELECT {comment} coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"
+        " AS n FROM aggsrc"
+    )
+    plain = "SELECT DISTINCTCOUNTHLL(u) AS n FROM aggsrc"
+    assert (
+        agg_engine.query(commented).collect()
+        == agg_engine.query(plain).collect()
+    )
+
+
 def test_pinot_agg_group_by_through_broker_envelope(agg_engine):
     """The dashboard shape end-to-end: Pinot aggregate spellings inside a
     GROUP BY through query_broker_response — the exact SQL a Pinot console

@@ -699,6 +699,21 @@ _sql_frag_st = st.lists(
             alphabet=st.characters(codec="utf-8", categories=("L", "N", "P", "Zs")),
             min_size=1, max_size=12,
         ).map(lambda s: "'" + s.replace("'", "''") + "'"),
+        # comments are opaque too, even holding an unbalanced quote
+        st.builds(
+            lambda opener, body: (
+                f"-- {body}\n" if opener == "--"
+                else "/* " + body.replace("*/", "").replace("/*", "") + " */"
+            ),
+            st.sampled_from(["--", "/*"]),
+            st.text(
+                alphabet=st.characters(
+                    codec="utf-8", categories=("L", "N", "P", "Zs"),
+                    include_characters="'\"",
+                ),
+                max_size=12,
+            ),
+        ),
     ),
     min_size=1,
     max_size=10,
@@ -709,8 +724,10 @@ _sql_frag_st = st.lists(
 @settings(max_examples=50, deadline=None)
 def test_agg_rewrite_idempotent_and_literal_safe(sql):
     from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import (
-        _skip_literal,
         rewrite_pinot_aggregates as R,
+    )
+    from real_time_analytics_with_apache_pinot_on_aws_spark.sqlscan import (
+        _literal_spans,
     )
 
     try:
@@ -718,15 +735,41 @@ def test_agg_rewrite_idempotent_and_literal_safe(sql):
     except ValueError:
         return  # loud arity errors are fine; nothing must be silent
     assert R(once) == once  # idempotent: outputs use non-table names only
-    # every literal span of the input survives verbatim in the output
-    i = 0
-    while i < len(sql):
-        if sql[i] == "'":
-            j = _skip_literal(sql, i)
-            assert sql[i:j] in once, sql[i:j]
-            i = j
-            continue
-        i += 1
+    # every literal and comment span of the input survives verbatim
+    for i, j in _literal_spans(sql):
+        assert sql[i:j] in once, sql[i:j]
+
+
+# ---------------------------------------------------------------------------
+# The shared top-level splitter (sqlscan._split_top_level): pieces holding
+# no top-level separator come back exactly, whatever nests or hides inside
+# them — ( and [ groups, both literal forms, both comment forms.
+# ---------------------------------------------------------------------------
+
+_split_piece_st = st.lists(
+    st.sampled_from([
+        "a", " b ", "f(x, y)", "ARRAY[1, 2]", "m[0]", "'c, d'", '"e, f"',
+        "'g AND h'", "/* i, j AND k */", "-- l, m AND n\n", "(p AND q)",
+        "brand", "x_and",
+    ]),
+    max_size=3,
+).map("".join)
+
+
+@given(pieces=st.lists(_split_piece_st, max_size=5))
+@settings(max_examples=200, deadline=None)
+def test_split_top_level_is_lossless(pieces):
+    from real_time_analytics_with_apache_pinot_on_aws_spark.sqlscan import (
+        _split_top_level,
+    )
+
+    # empty input and a trailing separator both keep their empty piece
+    want = pieces or [""]
+    assert _split_top_level(",".join(pieces)) == want
+    text = " AND ".join(pieces)
+    got = _split_top_level(text, "AND")
+    assert "AND".join(got) == text
+    assert [g.strip() for g in got] == [p.strip() for p in want]
 
 
 # ---------------------------------------------------------------------------
