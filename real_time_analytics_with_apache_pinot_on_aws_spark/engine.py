@@ -41,7 +41,12 @@ from .sqlscan import (
     _search_unquoted_re,
     _split_top_level,
 )
-from .streaming.ingest import IngestPipeline, RawRecordSource
+from .streaming.ingest import (
+    IngestPipeline,
+    RawRecordSource,
+    bloom_filter_options,
+    seal_day_partitions,
+)
 from .operators.clp import (
     clp_column_names as _clp_column_names,
     clp_encode as _clp_encode,
@@ -253,20 +258,15 @@ class TableConfig:
                 )
                 if grans:
                     timestamp_cols.append((fc["name"], grans))
-        flush_ms = stream.get("realtime.segment.flush.threshold.time")
-        flush_s = 120
-        if flush_ms:  # reference uses e.g. "2m"? value is millis or duration string
-            text = str(flush_ms)
-            if text.endswith("m"):
-                flush_s = int(text[:-1]) * 60
-            elif text.isdigit():
-                flush_s = int(text) // 1000
+        flush = stream.get(_FLUSH_KEY)
         return cls(
             name=conf.get("tableName", "table"),
             table_type=conf.get("tableType", "REALTIME"),
             time_column=seg.get("timeColumnName"),
             retention_days=retention,
-            flush_threshold_seconds=flush_s,
+            flush_threshold_seconds=(
+                120 if flush is None else _flush_threshold_seconds(flush)
+            ),
             upsert_mode=ups.get("mode", "").upper() or None,
             dedup_enabled=bool(conf.get("dedupConfig", {}).get("dedupEnabled", False)),
             primary_key_columns=tuple(conf.get("primaryKeyColumns", ())),
@@ -301,6 +301,36 @@ class TableConfig:
             null_handling_enabled=bool(tic.get("nullHandlingEnabled", True)),
             is_dim_table=bool(conf.get("isDimTable", False)),
         )
+
+
+_FLUSH_KEY = "realtime.segment.flush.threshold.time"
+_PERIOD_RE = re.compile(
+    r"(?:([0-9]+)d)?(?:([0-9]+)h)?(?:([0-9]+)m)?(?:([0-9]+)s)?", re.I
+)
+
+
+def _flush_threshold_seconds(value) -> int:
+    """``realtime.segment.flush.threshold.time`` as a trigger interval in
+    whole seconds, parsed the way Pinot's StreamConfig does: a period
+    string of ``d``/``h``/``m``/``s`` units, combinable (``"1h30m"``),
+    else integer milliseconds (``"1000"``).  Anything else, or a zero
+    period, is rejected naming the key.  Milliseconds round UP to whole
+    seconds, so ``"500"`` seals every second, never back-to-back."""
+    text = str(value).strip()
+    m = _PERIOD_RE.fullmatch(text)
+    if text and m:
+        d, h, mi, s = (int(g or 0) for g in m.groups())
+        ms = (((d * 24 + h) * 60 + mi) * 60 + s) * 1000
+    elif re.fullmatch(r"[0-9]+", text):
+        ms = int(text)
+    else:
+        raise ValueError(
+            f"invalid {_FLUSH_KEY}: {value!r} — expected a period like "
+            "'2m', '6h' or '1h30m', or integer milliseconds"
+        )
+    if ms <= 0:
+        raise ValueError(f"invalid {_FLUSH_KEY}: {value!r} — must be positive")
+    return -(-ms // 1000)
 
 
 # Pinot timestampConfig granularities this engine materializes — the subset
@@ -1006,10 +1036,13 @@ class Engine:
         data = pipeline.table_path
         tmp = str(self.warehouse / name / "data_upsert_tmp")
         old = str(self.warehouse / name / "data_upsert_old")
-        writer = resolved.write.mode("overwrite")
-        if "ingest_date" in resolved.columns:
-            writer = writer.partitionBy("ingest_date")
-        writer.parquet(tmp)
+        # re-seal with the same layout the ingest commit gives the log:
+        # one file per day, sorted, bloom-filtered
+        seal_day_partitions(
+            resolved, tmp, "overwrite",
+            sort_column=config.sorted_column,
+            options=bloom_filter_options(config.bloom_filter_columns),
+        )
         n_after = self.spark.read.parquet(tmp).count()
         if not _fs.rename(self.spark, data, old):
             raise RuntimeError(
@@ -1078,9 +1111,7 @@ class Engine:
         for col in clp_declared:
             if col in out.columns:
                 out = _clp_encode(out, col)
-        out.write.mode("append").partitionBy("ingest_date").parquet(
-            self._offline_path(name)
-        )
+        seal_day_partitions(out, self._offline_path(name), "append")
         # Pinot builds star-trees on OFFLINE segments too **[P1.2]**: when
         # the hybrid's REALTIME config declares star-trees, each upload
         # appends its partial cells so query_agg can route hybrid
@@ -1102,9 +1133,9 @@ class Engine:
                 continue
             from .streaming.rollup import rollup_batch
 
-            rollup_batch(out, spec).write.mode("append").partitionBy(
-                "ingest_date"
-            ).parquet(self._offline_rollup_path(name, i))
+            seal_day_partitions(
+                rollup_batch(out, spec), self._offline_rollup_path(name, i), "append"
+            )
         # Per-upload cell-coverage manifest: day-set comparison cannot see a
         # day holding BOTH a covered and an uncovered upload (routing over
         # such a day silently drops the uncovered segment's rows), so
@@ -1256,9 +1287,7 @@ class Engine:
             )
         for i, spec in specs:
             cells = rollup_batch(frame, spec)
-            cells.write.mode("overwrite").partitionBy("ingest_date").parquet(
-                self._offline_rollup_path(name, i)
-            )
+            seal_day_partitions(cells, self._offline_rollup_path(name, i), "overwrite")
             rebuilt[f"offline_startree{i}"] = cells.count()
         # reset the manifest: one synthetic fully-covered upload replaces
         # the history (subsequent uploads append normally)
@@ -3649,9 +3678,10 @@ class Engine:
     def compact(self, name: str, max_files_per_partition: int = 1) -> dict:
         """Segment-merge task analog (Pinot minion MergeRollupTask **[P1.2]**).
 
-        Streaming ingest leaves one file per micro-batch per partition; at a
-        2-minute flush cadence that is ~720 small files/day.  Compaction
-        rewrites any day partition holding more files than the target down to
+        Streaming ingest leaves one file per micro-batch per day partition
+        (``streaming.ingest.seal_day_partitions``); at a 2-minute flush
+        cadence that is ~720 small files/day.  Compaction rewrites any day
+        partition holding more files than the target down to
         ``max_files_per_partition`` — read, coalesce, swap — restoring scan
         efficiency without touching query code.  Run it like the reference
         runs minion tasks: scheduled, per partition, off the ingest path.
@@ -3660,8 +3690,9 @@ class Engine:
         same code compacts a local warehouse and an ``s3a://`` deep store —
         the reference's S3 segment home (pinot-controller.conf:34-40).
         OFFLINE segments compact too (each upload_segment leaves one file
-        per day), including their star-tree cell logs; an OFFLINE-only
-        table has no stream to drain and compacts directly.
+        per day, sealed by the same writer), including their star-tree cell
+        logs; an OFFLINE-only table has no stream to drain and compacts
+        directly.
         """
         self._reject_dim(name)
         compacted: dict[str, int] = {}

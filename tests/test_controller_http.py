@@ -122,6 +122,27 @@ def test_controller_health_and_bad_requests(spark, tmp_path):
         ctl.stop()
 
 
+def test_addtable_rejects_bad_flush_threshold(spark, tmp_path):
+    """An unparseable ``realtime.segment.flush.threshold.time`` is a 400
+    naming the key, not a silent 2-minute or back-to-back trigger."""
+    engine = Engine(spark, str(tmp_path / "warehouse"))
+    ctl = start_controller(engine, port=0)
+    try:
+        base = ctl.url()
+        code, _ = _req(f"{base}/schemas", "POST", CLICKSTREAM_SCHEMA)
+        assert code == 200
+        cfg = _table_config(str(tmp_path / "stream_in"))
+        cfg["tableIndexConfig"]["streamConfigs"][
+            "realtime.segment.flush.threshold.time"
+        ] = "bogus"
+        code, resp = _req(f"{base}/tables", "POST", cfg)
+        assert code == 400
+        assert "realtime.segment.flush.threshold.time" in resp["error"]
+        assert engine.pipelines == {}
+    finally:
+        ctl.stop()
+
+
 def test_drop_table_hybrid_one_side(spark, tmp_path):
     """DELETE ?type=REALTIME on a hybrid table leaves the OFFLINE side
     serving (Pinot keys configs by (name, type))."""
