@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from . import fs as _fs
 from . import functions as pfn
 from .functions import aggsql
+from .resultcache import ResultCache
 from .schema import TableSchema, parse_schema
 from .sqlscan import (
     _find_top_level_keyword,
@@ -391,6 +392,40 @@ def _json_safe(v):
     return v
 
 
+def _timeout_envelope(ms: int, timeout_ms: "int | None") -> dict:
+    """Pinot's EXECUTION_TIMEOUT (errorCode 250) broker envelope."""
+    return {
+        "numRowsResultSet": 0,
+        "timeUsedMs": ms,
+        "exceptions": [
+            {
+                "errorCode": 250,
+                "message": (
+                    f"query exceeded timeoutMs={timeout_ms} and was cancelled"
+                ),
+            }
+        ],
+    }
+
+
+def _leaf_relations(plan) -> list:
+    """The ``relation`` of every leaf of a JVM logical plan, subqueries
+    included; empty when some leaf is not a file relation (a range, local
+    rows, a command ...)."""
+    plans = [plan]
+    subs = plan.subqueriesAll()
+    plans += [subs.apply(i) for i in range(subs.size())]
+    out = []
+    for p in plans:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() != "LogicalRelation":
+                return []
+            out.append(leaf.relation())
+    return out
+
+
 class Engine:
     """A Pinot-capability analytics engine on a SparkSession."""
 
@@ -432,6 +467,17 @@ class Engine:
         # statement routes' is_aggregate fail-safe (_is_catalog_aggregate
         # below).
         self._catalog_fn_classes: dict | None = None
+        # broker answers keyed on (request text, view generation); every
+        # view this engine publishes or drops goes through _publish_views,
+        # which bumps the generation (resultcache.py)
+        self._result_cache = ResultCache()
+        # per published view: the parquet relations its plan reads.  A
+        # stored answer may read only these (identity, not path: a fresh
+        # listing of the same directory is a different, newer relation)
+        self._view_relations: dict[str, list] = {}
+        self._published_relations = None  # JVM IdentityHashMap over them
+        self._publish_lock = threading.Lock()  # one publisher at a time
+        self._current_like = None  # TreePattern.CURRENT_LIKE, looked up once
         pfn.register_all(spark)
 
     def _catalog_class(self, u: str) -> str | None:
@@ -772,11 +818,10 @@ class Engine:
                 f"primaryKeyColumns rows {list(config.primary_key_columns)}"
             )
         self.configs[config.name] = config
-        loaded.createOrReplaceTempView(config.name)
         # Pinot table-type suffix addressing **[P1.2]**: a dimension table
         # is OFFLINE, so ``dim_OFFLINE`` must bind (Spark view names are
         # case-insensitive — the Pinot-cased suffix resolves here)
-        loaded.createOrReplaceTempView(f"{config.name}_offline")
+        self._publish_views({config.name: loaded, f"{config.name}_offline": loaded})
         return {"table": config.name, "path": path, "rows": n}
 
     # -- OFFLINE tables + hybrid (A8 batch side, B3) ---------------------
@@ -1337,40 +1382,64 @@ class Engine:
         exactly as Pinot's broker resolves upsert tables at query time
         **[P1.2]**; the raw append-only log stays available as ``<name>_raw``.
         """
+        self._publish_views(self._table_views(name))
+
+    def _table_views(self, name: str) -> dict[str, DataFrame]:
+        """View name -> frame for every view :meth:`register_view`
+        publishes for ``name``, in publish order."""
         if self._is_dim(name):
             # dimension tables register at add_dim_table; re-register =
             # refresh the parquet listing, same as for consuming tables
             dim = self._resolved_frame(name)
-            dim.createOrReplaceTempView(name)
-            dim.createOrReplaceTempView(f"{name}_offline")
-            return
+            return {name: dim, f"{name}_offline": dim}
         offline = self.offline_configs.get(name)
         if offline is not None and name not in self.pipelines:
             off = self._offline_frame(name)
-            off.createOrReplaceTempView(name)
             # Pinot table-type suffix **[P1.2]**: ``mytable_OFFLINE`` binds
             # on a pure offline table too (view names are case-insensitive,
             # so the Pinot-cased form resolves to this view)
-            off.createOrReplaceTempView(f"{name}_offline")
-            return
+            return {name: off, f"{name}_offline": off}
         raw = self.pipelines[name].table()
         resolved = self._realtime_resolved(name)
         if offline is not None:
             # HYBRID **[P1.2]**: side views for inspection; the main view is
             # the boundary merge every read path shares (_resolved_frame)
-            self._offline_frame(name).createOrReplaceTempView(f"{name}_offline")
-            resolved.createOrReplaceTempView(f"{name}_realtime")
-            self._resolved_frame(name).createOrReplaceTempView(name)
-            return
+            return {
+                f"{name}_offline": self._offline_frame(name),
+                f"{name}_realtime": resolved,
+                name: self._resolved_frame(name),
+            }
         # Pinot table-type suffix **[P1.2]**: ``mytable_REALTIME`` binds on
         # a pure realtime table as well (the resolved view — suffixing never
         # bypasses upsert resolution; that is skipUpsert's job)
-        resolved.createOrReplaceTempView(f"{name}_realtime")
         if resolved is raw:
-            raw.createOrReplaceTempView(name)
-            return
-        raw.createOrReplaceTempView(f"{name}_raw")
-        resolved.createOrReplaceTempView(name)
+            return {f"{name}_realtime": resolved, name: raw}
+        return {f"{name}_realtime": resolved, f"{name}_raw": raw, name: resolved}
+
+    def _publish_views(self, views: "dict[str, DataFrame | None]") -> None:
+        """Publish (frame) or drop (None) SQL views, in order — the one
+        place this engine changes a view its tables are served through.
+        The frames are built before the call, so the publish bracket that
+        holds off the result cache (resultcache.py) covers only the catalog
+        updates themselves."""
+        with self._publish_lock, self._result_cache.publishing():
+            for view, frame in views.items():
+                if frame is None:
+                    self._view_relations.pop(view, None)
+                    try:
+                        self.spark.catalog.dropTempView(view)
+                    except Exception:
+                        pass
+                    continue
+                frame.createOrReplaceTempView(view)
+                self._view_relations[view] = _leaf_relations(
+                    frame._jdf.queryExecution().analyzed()
+                )
+            published = self.spark._jvm.java.util.IdentityHashMap()
+            for rels in self._view_relations.values():
+                for rel in rels:
+                    published.put(rel, True)
+            self._published_relations = published
 
     def _resolved_frame(self, name: str, with_virtual: bool = False) -> DataFrame:
         """The frame queries must see: the raw log for plain tables, the
@@ -1566,14 +1635,13 @@ class Engine:
             k: v for k, v in self._rollup_complete_cache.items() if k[0] != name
         }
         gone = name not in self.pipelines and name not in self.offline_configs
-        for view in (name, f"{name}_raw", f"{name}_offline", f"{name}_realtime"):
-            # captured view plans still union the deleted side's files; drop
-            # them all, then re-register the main view over the surviving
-            # side so "the other keeps serving" holds without caller action
-            try:
-                self.spark.catalog.dropTempView(view)
-            except Exception:
-                pass
+        # captured view plans still union the deleted side's files; drop
+        # them all, then re-register the main view over the surviving
+        # side so "the other keeps serving" holds without caller action
+        self._publish_views({
+            view: None
+            for view in (name, f"{name}_raw", f"{name}_offline", f"{name}_realtime")
+        })
         if not gone and not self._is_dim(name):
             self.register_view(name)
         return {"table": name, "dropped": dropped}
@@ -2665,6 +2733,11 @@ class Engine:
     # is planning time, not execution time.
     _EXCLUDED_RULES_LOCK = threading.RLock()
 
+    # Whether the last query() on this thread built its frame with plain
+    # Spark SQL (see _route); query_broker_response reads it right after
+    # its own query() call on the same thread.
+    _route_state = threading.local()
+
     def _sql_without_union_pushdown(self, sql: str) -> DataFrame:
         """Plan a statement with ``PushProjectionThroughUnion`` excluded.
 
@@ -2729,20 +2802,25 @@ class Engine:
         aggsql.rewrite_mode_avg_statement,
     )
 
-    # Terminal handlers, in priority order, as (gate, handler) pairs: the
-    # first gate to return a truthy value answers the statement and its
-    # handler receives that value; plain Spark SQL answers the rest.
-    # Gates see the rewritten SQL and whether the LOOKUP pass changed it.
+    # Terminal handlers, in priority order, as (gate, handler, reusable)
+    # triples: the first gate to return a truthy value answers the
+    # statement and its handler receives that value; plain Spark SQL
+    # answers the rest.  Gates see the rewritten SQL and whether the LOOKUP
+    # pass changed it.  ``reusable`` is False for the handlers that build
+    # request-time frames (their answers are never stored by the broker's
+    # result cache); LOOKUP is plain Spark SQL over published views.
     _TERMINAL_HANDLERS = (
         # SELECT GAPFILL(...): operators/gapfill
         (
             lambda self, sql, looked_up: _search_unquoted_re(self._GAPFILL_RE, sql),
             lambda self, sql, m: self._query_gapfill(sql, m),
+            False,
         ),
         # LOOKUP subqueries: plan with PushProjectionThroughUnion excluded
         (
             lambda self, sql, looked_up: looked_up,
             lambda self, sql, _: self._sql_without_union_pushdown(sql),
+            True,
         ),
         # $docId / $segmentName / $hostName
         (
@@ -2750,18 +2828,22 @@ class Engine:
                 self._VIRTUAL_COL_RE, sql
             ),
             lambda self, sql, _: self._query_virtual_columns(sql),
+            False,
         ),
         (
             lambda self, sql, looked_up: self._VECSIM_RE.match(sql),
             lambda self, sql, m: self._query_vector_similarity(m),
+            False,
         ),
         (
             lambda self, sql, looked_up: self._match_on_table(self._TEXTMATCH_RE, sql),
             lambda self, sql, m: self._query_text_match(m),
+            False,
         ),
         (
             lambda self, sql, looked_up: self._match_on_table(self._JSONMATCH_RE, sql),
             lambda self, sql, m: self._query_json_match(m),
+            False,
         ),
     )
 
@@ -2800,7 +2882,18 @@ class Engine:
         ``CLPDECODE(field)`` over a column a config declares CLP-encoded
         **[P1.2]** expands to the 3-argument form over its physical
         columns (:meth:`_expand_clpdecode_sugar`; operators/clp.py).
+        A statement Spark runs as a command (DDL, ``CACHE``, ``REFRESH``,
+        ``SET``) starts a new view generation, emptying the broker's
+        result cache.
         """
+        df, reusable = self._route(sql)
+        self._route_state.reusable = reusable
+        return df
+
+    def _route(self, sql: str) -> "tuple[DataFrame, bool]":
+        """:meth:`query`'s body: the frame, and whether plain Spark SQL
+        built it (a statement route, LOOKUP or the final ``spark.sql``)
+        rather than a request-time frame builder or EXPLAIN."""
         sql, _opts = self._strip_query_options(sql)
         # EXPLAIN delegates EVERYTHING to a re-entry on the inner
         # statement: options are re-prepended so the option-driven
@@ -2822,7 +2915,7 @@ class Engine:
                 )
             return self.explain_plan(
                 inner, logical=m.group("logical") is not None
-            )
+            ), False
         if str(_opts.get("skipUpsert", "false")).lower() == "true":
             sql = self._apply_skip_upsert_rewrite(sql)
         if str(_opts.get("enableNullHandling", "true")).lower() == "false":
@@ -2900,11 +2993,16 @@ class Engine:
             rewritten = self._rewrite_lookup_calls(sql)
             looked_up = rewritten != sql
             sql = rewritten
-        for gate, handler in self._TERMINAL_HANDLERS:
+        for gate, handler, reusable in self._TERMINAL_HANDLERS:
             hit = gate(self, sql, looked_up)
             if hit:
-                return handler(self, sql, hit)
-        return self.spark.sql(self._apply_ts_index_rewrite(sql))
+                return handler(self, sql, hit), reusable
+        df = self.spark.sql(self._apply_ts_index_rewrite(sql))
+        if df._jdf.queryExecution().commandExecuted().nodeName() == "CommandResult":
+            # Spark ran it on the spot; any view or setting it changed must
+            # not be answered from a stored result
+            self._result_cache.invalidate()
+        return df, True
 
     _CLPDECODE_SUGAR_RE = re.compile(
         r"\bCLPDECODE\s*\(\s*"
@@ -3427,7 +3525,47 @@ class Engine:
         (exact, like Pinot's BigDecimal serialization), BYTES as hex
         strings, arrays element-wise.  ``json.dumps`` on the returned dict
         is guaranteed to succeed (pinned by test_broker_response_json).
+
+        Result cache (resultcache.py): the answer is keyed on the exact
+        request text (options included) and the engine's view generation.
+        Only a successful, untimed-out answer whose plan is plain Spark SQL
+        that is deterministic, reads no current time and reads nothing but
+        the parquet relations of views this engine published is stored.  A
+        hit or a shared in-flight answer gets its own ``requestId`` and
+        ``timeUsedMs``; a request waiting on an identical in-flight miss
+        waits no longer than its own ``timeoutMs``.
         """
+        import time as _time
+        import uuid as _uuid
+
+        t0 = _time.monotonic()
+        _, _opts = self._strip_query_options(sql)
+        try:
+            timeout_ms = int(_opts["timeoutMs"]) if "timeoutMs" in _opts else None
+        except (TypeError, ValueError):
+            timeout_ms = None
+        answer, how = self._result_cache.serve(
+            sql,
+            lambda: self._broker_answer(sql, _opts, timeout_ms),
+            timeout_ms / 1000.0 if timeout_ms is not None and timeout_ms > 0 else None,
+        )
+        if answer is None:
+            return _timeout_envelope(int((_time.monotonic() - t0) * 1000), timeout_ms)
+        if how != "run":
+            answer["requestId"] = _uuid.uuid4().hex[:16]
+            answer["timeUsedMs"] = int((_time.monotonic() - t0) * 1000)
+        return answer
+
+    def result_cache_stats(self) -> dict:
+        """The broker result cache's counters (hits, misses, coalesced,
+        stores, invalidations) and its current entries and generation."""
+        return self._result_cache.stats()
+
+    def _broker_answer(
+        self, sql: str, _opts: dict, timeout_ms: "int | None"
+    ) -> "tuple[dict, bool]":
+        """Run one broker request: the envelope, and whether the result
+        cache may store it."""
         import time as _time
         import uuid as _uuid
 
@@ -3438,11 +3576,6 @@ class Engine:
         # other) and a watchdog cancels the group at the deadline — the
         # envelope answers with Pinot's EXECUTION_TIMEOUT errorCode 250
         # instead of hanging the HTTP client.
-        _, _opts = self._strip_query_options(sql)
-        try:
-            timeout_ms = int(_opts["timeoutMs"]) if "timeoutMs" in _opts else None
-        except (TypeError, ValueError):
-            timeout_ms = None
         # Pinot numGroupsLimit **[P1.2]**: cap the groups a group-by answer
         # carries and FLAG the trim (numGroupsLimitReached).  The analog is
         # strictly more accurate than Pinot's: Pinot stops TRACKING groups
@@ -3486,7 +3619,9 @@ class Engine:
 
                 watchdog = threading.Thread(target=_watchdog, daemon=True)
                 watchdog.start()
+            self._route_state.reusable = False
             df = self.query(sql)
+            reusable = self._route_state.reusable
             if groups_limit is not None:
                 rows = df.limit(groups_limit + 1).collect()
                 groups_trimmed = len(rows) > groups_limit
@@ -3502,19 +3637,7 @@ class Engine:
             # column/table), 200 execution, 250 execution timeout.
             ms = int((_time.monotonic() - t0) * 1000)
             if timed_out:
-                return {
-                    "numRowsResultSet": 0,
-                    "timeUsedMs": ms,
-                    "exceptions": [
-                        {
-                            "errorCode": 250,
-                            "message": (
-                                f"query exceeded timeoutMs={timeout_ms} "
-                                "and was cancelled"
-                            ),
-                        }
-                    ],
-                }
+                return _timeout_envelope(ms, timeout_ms), False
             return {
                 "numRowsResultSet": 0,
                 "timeUsedMs": ms,
@@ -3524,14 +3647,14 @@ class Engine:
                         "message": f"{type(e).__name__}: {e}"[:4096],
                     }
                 ],
-            }
+            }, False
         finally:
             done.set()
             if watchdog is not None:
                 watchdog.join(timeout=2)
                 sc.setLocalProperty("spark.jobGroup.id", None)
         ms = int((_time.monotonic() - t0) * 1000)
-        return {
+        envelope = {
             "resultTable": {
                 "dataSchema": {
                     "columnNames": df.columns,
@@ -3562,6 +3685,27 @@ class Engine:
             "numGroupsLimitReached": groups_trimmed,
             "partialResult": False,
         }
+        return envelope, (
+            reusable and not timed_out and self._reads_published_views_only(df)
+        )
+
+    def _reads_published_views_only(self, df: DataFrame) -> bool:
+        """The result-cache gate on an analyzed plan: deterministic, no
+        current-time expression (``now()``, ``AGO``, ``current_date``;
+        subqueries included), and every leaf — subqueries included — a
+        parquet relation of a view this engine published."""
+        plan = df._jdf.queryExecution().analyzed()
+        if self._current_like is None:
+            self._current_like = (
+                self.spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
+            )
+        if not plan.deterministic() or plan.containsPattern(self._current_like):
+            return False
+        rels = _leaf_relations(plan)
+        published = self._published_relations
+        return bool(rels) and published is not None and all(
+            published.containsKey(rel) for rel in rels
+        )
 
     @staticmethod
     def _broker_error_code(e: Exception) -> int:
@@ -3813,7 +3957,6 @@ class Engine:
         offline_path = str(self.warehouse / name / "offline")
         offline_table = f"{name}_offline"
         df = self.spark.read.parquet(pipeline.table_path)
-        self.spark.sql(f"DROP TABLE IF EXISTS {offline_table}")
         writer = (
             df.write.mode("overwrite")
             .option("path", offline_path)
@@ -3821,7 +3964,11 @@ class Engine:
         )
         if config.sorted_column:
             writer = writer.sortBy(config.sorted_column)
-        writer.saveAsTable(offline_table)
+        # DROP TABLE also drops a temp view of that name (a hybrid table's
+        # published ``_offline`` side)
+        with self._result_cache.publishing():
+            self.spark.sql(f"DROP TABLE IF EXISTS {offline_table}")
+            writer.saveAsTable(offline_table)
         return {
             "table": name,
             "offline_table": offline_table,

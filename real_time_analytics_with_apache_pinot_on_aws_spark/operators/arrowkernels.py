@@ -49,6 +49,7 @@ materializing every candidate pair as a JVM row.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
@@ -155,7 +156,9 @@ def _seq_norm(A: np.ndarray) -> np.ndarray:
 def _scalar_cosine(a: np.ndarray | None, b: np.ndarray | None) -> float | None:
     """Slow-path single-pair cosine with zip_with null-padding semantics:
     null vector or unequal lengths -> null (Python floats ARE IEEE doubles,
-    so the sequential fold is bit-identical to the vectorized path)."""
+    so the sequential fold is bit-identical to the vectorized path).  The
+    final division is IEEE like :func:`_batch_cosine`'s: a zero norm
+    yields NaN or +-inf, never ZeroDivisionError."""
     if a is None or b is None or len(a) != len(b):
         return None
     s = 0.0
@@ -165,8 +168,16 @@ def _scalar_cosine(a: np.ndarray | None, b: np.ndarray | None) -> float | None:
         s = s + float(a[d]) * float(b[d])
         na = na + float(a[d]) * float(a[d])
         nb = nb + float(b[d]) * float(b[d])
-    denom = (na ** 0.5) * (nb ** 0.5)
-    return s / denom
+    denom = math.sqrt(na) * math.sqrt(nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return float(np.float64(s) / denom)
+
+
+def _batch_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of equal-shape matrices: the vectorized path of
+    :func:`score_pairs`, IEEE NaN/inf for zero-norm rows."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _seq_dot(A, B) / (_seq_norm(A) * _seq_norm(B))
 
 
 # ---------------------------------------------------------------------------
@@ -203,8 +214,7 @@ def score_pairs(
             A = _f64_matrix(b.column("_va"))
             B = _f64_matrix(b.column("_vb"))
             if A is not None and B is not None and A.shape == B.shape:
-                raw = _seq_dot(A, B) / (_seq_norm(A) * _seq_norm(B))
-                raw_arr = pa.array(raw, type=pa.float64())
+                raw_arr = pa.array(_batch_cosine(A, B), type=pa.float64())
             else:  # slow path: per-row Catalyst null semantics
                 ra = _rows(b.column("_va"))
                 rb = _rows(b.column("_vb"))

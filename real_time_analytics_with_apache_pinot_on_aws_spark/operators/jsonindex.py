@@ -49,7 +49,8 @@ def build_json_postings(
             pass
     leaves: DataFrame | None = None
     for depth in range(max_depth):
-        frontier.createOrReplaceTempView("_json_frontier")
+        # the frame is a query argument, not a named view: concurrent
+        # builds on one session never see each other's frontier
         exploded = spark.sql(
             """
             SELECT id,
@@ -57,8 +58,9 @@ def build_json_postings(
                                      ELSE concat('[', pos, ']') END) AS path,
                    e.value AS v,
                    schema_of_variant(e.value) AS _sch
-            FROM _json_frontier, LATERAL variant_explode(v) AS e
-            """
+            FROM {frontier}, LATERAL variant_explode(v) AS e
+            """,
+            frontier=frontier,
         )
         # Each level's explode output feeds TWO consumers (this level's
         # leaves + the next level's frontier), and the leaves of level k

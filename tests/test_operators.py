@@ -2173,3 +2173,49 @@ def test_bm25_duplicate_query_terms_score_once(spark):
     once = {r["id"]: r["score"] for r in textmatch.bm25_scores(df, "id", "text", "spark engine").collect()}
     dup = {r["id"]: r["score"] for r in textmatch.bm25_scores(df, "id", "text", "spark engine spark").collect()}
     assert once == dup
+
+
+def test_scalar_cosine_matches_batch_cosine_on_zero_norm_and_mixed_rows():
+    """The per-row slow path and the vectorized path of score_pairs divide
+    alike: a zero-norm vector gives IEEE NaN (0/0) instead of raising, and
+    every other row is bit-identical (both take sqrt of the same folds)."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    A = rng.normal(size=(400, 5)) * 10.0 ** rng.integers(-4, 4, size=(400, 1))
+    B = rng.normal(size=(400, 5))
+    A[:3] = 0.0            # zero norm on the left
+    B[2:6] = 0.0           # zero norm on the right (and both, row 2)
+    A[6] = -0.0            # negative zero
+    A[7, 1] = np.nan       # NaN element
+    B[8, 3] = np.inf       # infinite element
+    A[9] = 1e-200          # squares underflow to a zero norm: finite / 0
+    batch = arrowkernels._batch_cosine(A, B)
+    scalar = np.array([arrowkernels._scalar_cosine(a, b) for a, b in zip(A, B)])
+    assert np.isnan(batch[:9]).all() and np.isinf(batch[9])
+    assert [_bits(float(x)) for x in scalar] == [_bits(float(x)) for x in batch]
+
+
+def test_operators_publish_no_named_temp_views():
+    """Operators run inside concurrent broker requests on one session: a
+    session-global view name (the former ``_json_frontier``) lets two
+    requests analyze each other's frames.  Frames go to SQL as
+    ``spark.sql(..., name=frame)`` arguments instead."""
+    import ast
+    from pathlib import Path
+
+    from real_time_analytics_with_apache_pinot_on_aws_spark import operators
+
+    calls = []
+    for path in sorted(Path(operators.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in (
+                    "createOrReplaceTempView", "createTempView",
+                    "createGlobalTempView", "createOrReplaceGlobalTempView",
+                )
+            ):
+                calls.append(f"{path.name}:{node.lineno}")
+    assert calls == []
